@@ -9,7 +9,8 @@ frontier") cannot re-shuffle the whole frontier every round. Layout invariant
   every version of a URL in exactly ONE bucket;
 - the base is written once; each round appends per-bucket DELTA files of full
   replacement rows tagged with a monotone ``__rev`` (the snapshot id);
-- compaction folds deltas into a fresh base when they outgrow it.
+- compaction folds a bucket's deltas into a fresh base once the bucket
+  holds more than ``files_per_bucket`` files (per-bucket tiering).
 
 ``select_candidates`` plans one narrow task per bucket (per-bucket file scans
 coalesced to one partition, unioned — NO shuffle): each task merges last-wins
@@ -208,24 +209,33 @@ def select_candidates(
 ZONE_COLS = ["state", "depth", "disc_seq", "host"]
 _ZONE_SCHEMA = (
     "file string, n_queued long, min_depth int, min_seq long, n_hosts long, "
-    "depth_hist string, sel_hist string"
+    "depth_hist string, sel_hist string, done_hist string"
 )
 _MAX_SEQ = (1 << 63) - 1  # exclusive disc_seq sentinel: key < (d, _MAX_SEQ) ⟺ depth ≤ d
 
 
 def _zone_stats_one(f: str, max_tokens: int) -> dict:
     """Zone stats for ONE frontier parquet file (the shared kernel of the
-    inline and distributed paths)."""
+    inline and distributed paths). ``done_hist`` histograms the file's
+    fetched rows by depth: in a delta file each one retires a queued row
+    of an earlier file, which IceTable._summarize subtracts."""
     import numpy as np
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    def _hist(a) -> dict[int, int]:
+        vals, cnts = np.unique(a, return_counts=True)
+        return {int(v): int(c) for v, c in zip(vals, cnts)}
+
     t = pq.read_table(f, columns=ZONE_COLS)
+    done = _hist(
+        t.filter(pc.equal(t.column("state"), "fetched")).column("depth").to_numpy()
+    )
     q = t.filter(pc.equal(t.column("state"), "queued"))
     if q.num_rows == 0:
         return {
             "n_queued": 0, "min_depth": 0, "min_seq": 0, "n_hosts": 0,
-            "depth_hist": {}, "sel_hist": {},
+            "depth_hist": {}, "sel_hist": {}, "done_hist": done,
         }
     q = q.combine_chunks()
     depth = q.column("depth").to_numpy()
@@ -234,8 +244,7 @@ def _zone_stats_one(f: str, max_tokens: int) -> dict:
     s = int(seq[depth == d].min())
     hcodes = q.column("host").chunk(0).dictionary_encode().indices.to_numpy()
     nh = int(hcodes.max()) + 1 if len(hcodes) else 0
-    vals, cnts = np.unique(depth, return_counts=True)
-    hist = {int(v): int(c) for v, c in zip(vals, cnts)}
+    hist = _hist(depth)
     # capped supply: first max_tokens rows per host in depth order,
     # histogrammed by depth
     order = np.lexsort((depth, hcodes))
@@ -246,11 +255,9 @@ def _zone_stats_one(f: str, max_tokens: int) -> dict:
         new_host[1:] = hs_[1:] != hs_[:-1]
     start = np.maximum.accumulate(np.where(new_host, idx, 0))
     keep = (idx - start) < max_tokens
-    sv, sc = np.unique(ds_[keep], return_counts=True)
-    sel = {int(v): int(c) for v, c in zip(sv, sc)}
     return {
         "n_queued": q.num_rows, "min_depth": d, "min_seq": s, "n_hosts": nh,
-        "depth_hist": hist, "sel_hist": sel,
+        "depth_hist": hist, "sel_hist": _hist(ds_[keep]), "done_hist": done,
     }
 
 
@@ -302,12 +309,14 @@ def compute_frontier_zones(
                 ("n_hosts", pa.int64()),
                 ("depth_hist", pa.string()),
                 ("sel_hist", pa.string()),
+                ("done_hist", pa.string()),
             ]
         )
         for rb in batches:
             out: dict[str, list] = {
                 "file": [], "n_queued": [], "min_depth": [],
                 "min_seq": [], "n_hosts": [], "depth_hist": [], "sel_hist": [],
+                "done_hist": [],
             }
             for f in rb.column("file").to_pylist():
                 z = _zone_stats_one(f, max_tokens)
@@ -318,6 +327,7 @@ def compute_frontier_zones(
                 out["n_hosts"].append(z["n_hosts"])
                 out["depth_hist"].append(json.dumps(z["depth_hist"]))
                 out["sel_hist"].append(json.dumps(z["sel_hist"]))
+                out["done_hist"].append(json.dumps(z["done_hist"]))
             yield pa.RecordBatch.from_arrays(
                 [pa.array(v, type=schema.field(i).type) for i, v in enumerate(out.values())],
                 schema=schema,
@@ -335,6 +345,7 @@ def compute_frontier_zones(
             "n_hosts": r["n_hosts"],
             "depth_hist": json.loads(r["depth_hist"]),
             "sel_hist": json.loads(r["sel_hist"]),
+            "done_hist": json.loads(r["done_hist"]),
         }
         for r in rows
     }
@@ -364,8 +375,8 @@ def _pruned_bucket_plan(
     alone cannot prune a uniform frontier) AND at bucket level (buckets with
     no queued row below tau are never opened). Buckets with zero queued rows
     anywhere are skipped unconditionally — exact with no verification, since
-    a row whose latest version is queued is queued in some file, so the
-    summary's per-file-aggregated histograms upper-bound the merged view."""
+    the summary's depth histogram is the merged view's (delta files'
+    fetched rows are subtracted — IceTable._summarize)."""
     entries = []  # (bucket_key, hist) for queued-bearing buckets
     n_total = 0
     depth_tot: dict[int, int] = {}

@@ -6,14 +6,17 @@ Each round is a Catalyst-planned batch job over snapshot-versioned tables:
           per-host top-k (NO shuffle: operators/frontier_select) →
           ⋈ broadcast(host_state) eligibility + exact tokens cut →
           exact global budget cut (no single-partition sort)
-  FETCH   mapInPandas over Arrow batches (simweb: outlinks + image decode)
+  FETCH   mapInArrow over Arrow batches: pass 1 outlinks + has_image;
+          pass 2 (image synthesis/encode) streams into the corpus commit
   EXPAND  posexplode(outlinks) → canonicalize (vectorized pandas UDF) →
           xxhash64 → first-discovery dedup (min struct) → seen anti-join
           (optionally Bloom-accelerated) → robots gate (JVM HOFs) → new rows
-  COMMIT  corpus.append ∥ seen.append ∥ frontier DELTA append (state
-          transitions + new rows; compacted when deltas outgrow the base) ∥
-          host_state update ∥ ordering/metrics append — then one atomic
-          CHECKPOINT swap
+  COMMIT  seven concurrent chains — corpus ∥ ordering ∥ crawl_log ∥ seen
+          delta ∥ Bloom shards ∥ host_touch ∥ frontier DELTA (state
+          transitions + new rows) — then one atomic CHECKPOINT swap. The
+          frontier and seen tables are tiered per bucket: a bucket is
+          compacted only once it holds more than files_per_bucket files, so
+          most rounds commit their deltas and nothing else
 
 Why batch-iterative and not Structured Streaming: crawl-ordering equality with
 the reference contract (BASELINE.json north_rule) needs deterministic global
@@ -28,8 +31,8 @@ equality against oracle/crawler.py at two parallelism levels.
 Scale notes (10^10 design point): a round touches O(selected + discovered)
 rows, never O(frontier) — SELECT is a narrow per-bucket scan (the bucket
 layout IS the partitioning), the frontier commit appends only the round's
-state transitions + new rows (merge-on-read, compaction-managed), the Bloom
-commit appends only the round's new-key shards (probe ORs shard rows), and
+state transitions + new rows (merge-on-read, tier-compacted per bucket), the
+Bloom commit appends only the round's new-key shards (probe ORs shard rows), and
 images never enter wide shuffles (corpus bytes take the append-only path).
 The seen-set verify is Bloom-pre-filtered AND bucket-pruned: only ~FPR of
 duplicate traffic needs exact verification, and the verify READS only the
@@ -93,12 +96,11 @@ class CrawlRunner:
         frontier_buckets: int = 16,
         frontier_salts: int = 1,
         max_tokens: int = 8,
-        compact_delta_frac: float = 0.5,
         bloom_shards_per_bucket: int = 8,
         bloom_shard_groups: int = 16,
         rows_per_bucket_target: int = 5_000_000,
         seen_buckets: int = 64,
-        seen_files_per_bucket: int = 8,
+        files_per_bucket: int = 8,
         checkpoint: str = "local",
     ):
         if checkpoint not in ("local", "disk"):
@@ -121,19 +123,22 @@ class CrawlRunner:
         # is the engine-wide upper bound on any host's tokens_per_round (the
         # per-bucket Arrow pre-cut keeps that many rows per host — asserted
         # against host_state at init). frontier_buckets is the INITIAL count:
-        # compaction doubles it whenever a bucket's rows exceed
-        # rows_per_bucket_target, so bucket size tracks frontier growth.
+        # the per-round re-bucket check doubles it whenever a bucket's rows
+        # exceed rows_per_bucket_target, so bucket size tracks frontier growth.
         self.frontier_buckets = frontier_buckets
         self.frontier_salts = frontier_salts
         self.max_tokens = max_tokens
-        self.compact_delta_frac = compact_delta_frac
         self.bloom_shards_per_bucket = bloom_shards_per_bucket
         self.bloom_shard_groups = bloom_shard_groups
         self.rows_per_bucket_target = rows_per_bucket_target
         # seen layout: pmod(url_hash, seen_buckets) — lets the exact verify
         # read ONLY the buckets Bloom suspects hash into (filter_new_bucketed)
         self.seen_buckets = seen_buckets
-        self.seen_files_per_bucket = seen_files_per_bucket
+        # compaction tiering for the frontier AND seen tables: a bucket is
+        # rewritten only once it holds more than this many files
+        # (IceTable.buckets_over_file_limit); 1 = compact every touched
+        # bucket every round
+        self.files_per_bucket = files_per_bucket
         self.frontier = IceTable(os.path.join(workdir, "frontier"))
         self.corpus = IceTable(os.path.join(workdir, "corpus"))
         self.seen = IceTable(os.path.join(workdir, "seen"))
@@ -203,12 +208,11 @@ class CrawlRunner:
             "frontier_buckets": self.frontier_buckets,
             "frontier_salts": self.frontier_salts,
             "max_tokens": self.max_tokens,
-            "compact_delta_frac": self.compact_delta_frac,
             "bloom_shards_per_bucket": self.bloom_shards_per_bucket,
             "bloom_shard_groups": self.bloom_shard_groups,
             "rows_per_bucket_target": self.rows_per_bucket_target,
             "seen_buckets": self.seen_buckets,
-            "seen_files_per_bucket": self.seen_files_per_bucket,
+            "files_per_bucket": self.files_per_bucket,
             "checkpoint": self.checkpoint,
             "bloom": None
             if self.bloom is None
@@ -245,12 +249,11 @@ class CrawlRunner:
             frontier_buckets=state["frontier_buckets"],
             frontier_salts=state["frontier_salts"],
             max_tokens=state["max_tokens"],
-            compact_delta_frac=state["compact_delta_frac"],
             bloom_shards_per_bucket=state["bloom_shards_per_bucket"],
             bloom_shard_groups=state["bloom_shard_groups"],
             rows_per_bucket_target=state["rows_per_bucket_target"],
             seen_buckets=state["seen_buckets"],
-            seen_files_per_bucket=state["seen_files_per_bucket"],
+            files_per_bucket=state["files_per_bucket"],
             checkpoint=state.get("checkpoint", "local"),
         )
         r.round = state["round"]
@@ -330,25 +333,22 @@ class CrawlRunner:
         )
 
     def _frontier_append_delta(self, df: DataFrame, meta: dict | None = None) -> None:
-        """O(changed rows) frontier commit; compaction folds deltas into a
-        fresh base once they exceed compact_delta_frac of it. Compaction is
-        bucket-local AND bucket-scoped: one task per DELTA-BEARING bucket
-        merges its own base ∪ delta files and writes its own compacted file —
-        no shuffle (rows never change bucket), and buckets the round never
-        touched are neither read nor rewritten (overwrite_buckets_partial)."""
+        """O(changed rows) frontier commit with per-bucket tiered
+        compaction: a bucket is compacted only once its file count (base +
+        deltas) exceeds files_per_bucket, so most rounds commit the delta
+        alone; the exact zone summaries (IceTable._summarize) keep pruning
+        as tight meanwhile. Compaction is bucket-local AND bucket-scoped: one
+        task per due bucket merges its own base ∪ delta files and writes its
+        own compacted file — no shuffle (rows never change bucket), and other
+        buckets are neither read nor rewritten (overwrite_buckets_partial).
+        The re-bucket check runs every round (it reads summaries only)."""
         self.frontier.append_bucketed_delta(
             self._with_layout(df.select(*FRONTIER_COLS)),
             meta=meta,
             zone_fn=self._zone_fn,
         )
-        if self.frontier.delta_fraction() > self.compact_delta_frac:
-            # hot buckets straight off the snapshot summaries — no manifest
-            # IO for cold buckets
-            hot = [
-                b
-                for b, s in self.frontier.bucket_summaries().items()
-                if s["n_delta_files"]
-            ]
+        hot = self.frontier.buckets_over_file_limit(self.files_per_bucket)
+        if hot:
             merged = compacted_frontier(
                 self.spark,
                 self.frontier,
@@ -367,16 +367,19 @@ class CrawlRunner:
                 merged, hot, meta={"op": "compaction", **carry},
                 zone_fn=self._zone_fn,
             )
-            self._maybe_split_buckets()
+        self._maybe_split_buckets()
 
     def _maybe_split_buckets(self) -> None:
         """Re-bucket when any bucket outgrows rows_per_bucket_target (checked
-        from snapshot row counts — no data read). Doubling the host-hash
+        from snapshot row counts — no data read). Sizes on ``merged_rows``:
+        uncompacted deltas hold second versions of rows counted in earlier
+        files, which ``rows`` would count twice. Doubling the host-hash
         bucket count rewrites the whole frontier once (the ONLY non-bucket-
         local maintenance op, amortized over the growth that triggered it) so
         per-bucket merge tasks stay memory-bounded as the frontier grows."""
         per_bucket = {
-            b: s["rows"] for b, s in self.frontier.bucket_summaries().items()
+            b: s["merged_rows"]
+            for b, s in self.frontier.bucket_summaries().items()
         }
         if not per_bucket or max(per_bucket.values()) <= self.rows_per_bucket_target:
             return
@@ -388,7 +391,7 @@ class CrawlRunner:
             # the oversized bucket is single-host skew, which doubling the
             # HOST-hash bucket count can never split (a host always lands in
             # `salts` buckets) — frontier_salts is the knob for that; forcing
-            # a doubling here would re-double on every compaction forever
+            # a doubling here would re-double on every round forever
             return
         hwm = self._frontier_disc_hwm()
         merged = merged_frontier(self.spark, self.frontier).select(*FRONTIER_COLS)
@@ -429,14 +432,10 @@ class CrawlRunner:
         ).repartition(sb, F.col("__fb"))
 
     def _maybe_compact_seen(self, r: int) -> None:
-        """Fold a seen bucket's delta files into one once they exceed
-        seen_files_per_bucket — bucket-scoped like the Bloom/frontier
-        compactions: cold buckets' files are untouched."""
-        hot = [
-            b
-            for b, s in self.seen.bucket_summaries().items()
-            if s["n_base_files"] + s["n_delta_files"] > self.seen_files_per_bucket
-        ]
+        """Fold a seen bucket's files into one once they exceed
+        files_per_bucket — the frontier's tiering rule; cold buckets' files
+        are untouched."""
+        hot = self.seen.buckets_over_file_limit(self.files_per_bucket)
         if not hot:
             return
         plan = self.seen.bucket_plan(buckets=hot)
@@ -689,8 +688,6 @@ class CrawlRunner:
             )
             self.corpus.append(images, meta={"round": r})
 
-        self._corpus_rows += n_images
-
         _mark("fetch_images")
 
         # EXPAND: outlinks → canonical candidates → dedup → seen filter → gate
@@ -831,22 +828,13 @@ class CrawlRunner:
             #
             # Second HWM check, immediately before the only disc_seq-bearing
             # append (the first, below the commit closures, aborts before ANY
-            # table commit): the guard is check-then-act, so this narrows —
-            # but does not close — the race window against an ingest epoch
-            # landing between the check and the append. Closing it would need
-            # a commit-time CAS on next_disc_seq; co-executing a
-            # processingTime ingest with a live round is unsupported (the
-            # module contract says BETWEEN rounds), so the guard is
-            # best-effort crash-loud detection, not a concurrency primitive.
-            hwm = self._frontier_disc_hwm()
-            if hwm > hwm_at_start:
-                raise RuntimeError(
-                    f"concurrent ingest advanced the disc_seq high-water mark "
-                    f"mid-round ({hwm_at_start} → {hwm}) at frontier-commit "
-                    "time; co-executing ingest with a live round is "
-                    "unsupported — run ingest between rounds (availableNow). "
-                    "resume() rolls this round back and replays it safely."
-                )
+            # table commit): it narrows — but does not close — the race
+            # window against an ingest epoch landing between the check and
+            # the append (see _guard_disc_hwm).
+            self._guard_disc_hwm(
+                hwm_at_start,
+                "at frontier-commit time (other chains may have committed)",
+            )
             updated = (
                 fetched.select(
                     "canon_url", "url_hash", "host", "depth", "disc_seq",
@@ -867,31 +855,8 @@ class CrawlRunner:
                 },
             )
 
-        # disc_seq uniqueness guard: the round claimed [next_disc_seq,
-        # next_disc_seq + n_new) when it started from the published
-        # high-water mark. A concurrent ingest epoch landing MID-round (a
-        # processingTime stream, which this engine does not support
-        # co-executing with a live round) would have allocated from the same
-        # mark — overlapping disc_seqs would break the global uniqueness the
-        # R3/R4 ordering and the zone-pruning key proof rely on. Detect the
-        # moved mark BEFORE any disc_seq-bearing table commits and fail stop:
-        # the round's ordering/corpus appends (no disc_seqs) are
-        # post-checkpoint garbage that CrawlRunner.resume() rolls back, so
-        # the round replays cleanly after the ingest quiesces. This check —
-        # and the re-check inside _commit_frontier right before the append —
-        # is check-then-act: it shrinks the race window to microseconds but
-        # cannot close it without a commit-time CAS; it is crash-loud
-        # detection for a violated composition contract, not a lock.
-        hwm_now = self._frontier_disc_hwm()
-        if hwm_now > hwm_at_start:
-            raise RuntimeError(
-                f"concurrent ingest advanced the disc_seq high-water mark "
-                f"mid-round ({hwm_at_start} → {hwm_now}); co-executing a "
-                "processingTime ingest stream with a live round is "
-                "unsupported — run ingest between rounds (availableNow). "
-                "No disc_seq-bearing table was committed; resume() replays "
-                "this round safely."
-            )
+        # first HWM check: before ANY table of the round commits
+        self._guard_disc_hwm(hwm_at_start, "before the commit pool started")
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -908,9 +873,12 @@ class CrawlRunner:
             ]
             for fut in futures:
                 fut.result()  # re-raise the first failure BEFORE checkpoint
+        # counters advance only once every chain has committed: a failed
+        # chain leaves them at the last checkpoint's values
         self.next_seq += n_selected
         self.next_disc_seq += n_new
         self._ordering_rows += n_selected
+        self._corpus_rows += n_images
         self.round = r
         _mark("commit")
         # metadata-only commit BEFORE the checkpoint so resume covers it:
@@ -926,6 +894,32 @@ class CrawlRunner:
             "n_images": n_images,
             "phase_sec": _t,
         }
+
+    def _guard_disc_hwm(self, hwm_at_start: int, when: str) -> None:
+        """disc_seq uniqueness guard: the round claimed [next_disc_seq,
+        next_disc_seq + n_new) when it started from the published high-water
+        mark. A concurrent ingest epoch landing MID-round (a processingTime
+        stream, which this engine does not support co-executing with a live
+        round) would have allocated from the same mark — overlapping
+        disc_seqs would break the global uniqueness the R3/R4 ordering and
+        the zone-pruning key proof rely on. Fail stop while no
+        disc_seq-bearing table (the frontier) has committed: whatever else
+        the round committed is post-checkpoint garbage that
+        CrawlRunner.resume() rolls back, so the round replays cleanly after
+        the ingest quiesces. The check is check-then-act: it shrinks the race
+        window to microseconds but cannot close it without a commit-time CAS
+        on next_disc_seq; it is crash-loud detection for a violated
+        composition contract (ingest runs BETWEEN rounds), not a lock."""
+        hwm = self._frontier_disc_hwm()
+        if hwm > hwm_at_start:
+            raise RuntimeError(
+                f"concurrent ingest advanced the disc_seq high-water mark "
+                f"mid-round ({hwm_at_start} → {hwm}) {when}; co-executing a "
+                "processingTime ingest stream with a live round is "
+                "unsupported — run ingest between rounds (availableNow). "
+                "No disc_seq-bearing table was committed; resume() rolls "
+                "this round back and replays it safely."
+            )
 
     def _maybe_compact_bloom(self, r: int) -> None:
         """Merge shard rows group-by-group, ONLY for groups whose shard-row

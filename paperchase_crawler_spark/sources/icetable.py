@@ -182,7 +182,8 @@ class IceTable:
     # APPENDS per-bucket delta files carrying full replacement rows tagged
     # with a monotone __rev column (the snapshot id). Readers merge
     # last-wins per key WITHIN each bucket — a narrow, shuffle-free plan —
-    # and compaction folds deltas back into the base when they outgrow it.
+    # and compaction folds a bucket's deltas back into its base once the
+    # bucket holds more files than its tier allows (buckets_over_file_limit).
     # This replaces the full-table overwrite per round: a round commits
     # O(changed rows), not O(frontier).
     #
@@ -254,13 +255,26 @@ class IceTable:
         row): row/file counts always; when EVERY file in the bucket has zone
         stats, the aggregated queued-depth histograms the pruning planner
         needs (``zoned`` False ⇒ planners must treat the bucket as unknown
-        and fall back to scanning it)."""
+        and fall back to scanning it).
+
+        The histograms describe the MERGED view, not the sum of files: a
+        delta file's ``done_hist`` (its fetched rows per depth) is
+        subtracted. A URL's depth never changes and it moves queued →
+        fetched at most once, its queued version living in an earlier file of
+        the same bucket, so ``n_queued``, ``depth_hist`` and ``merged_rows``
+        (``rows`` less those second versions) are exact; ``sel_hist`` stays a
+        planning estimate, clamped at 0. A depth that would go negative breaks
+        that invariant, so the bucket is reported unzoned (scanned, never
+        skipped). Base files are merged (compaction/rebucket write last-wins
+        rows), so their fetched rows have no queued twin and are not
+        subtracted."""
         counts = entry["row_counts"]
         base_rows = sum(counts[f] for f in entry["base"])
         delta_rows = sum(counts[f] for f in entry["delta"])
         files = entry["base"] + entry["delta"]
         s = {
             "rows": base_rows + delta_rows,
+            "merged_rows": base_rows + delta_rows,
             "base_rows": base_rows,
             "delta_rows": delta_rows,
             "n_base_files": len(entry["base"]),
@@ -268,13 +282,12 @@ class IceTable:
         }
         zones = entry.get("zones", {})
         if all(f in zones and "sel_hist" in zones[f] for f in files):
-            n_queued = 0
             depth_hist: dict[str, int] = {}
             sel_hist: dict[str, int] = {}
+            done_hist: dict[str, int] = {}
             min_key = None
             for f in files:
                 z = zones[f]
-                n_queued += z["n_queued"]
                 for d, n in z.get("depth_hist", {}).items():
                     depth_hist[str(d)] = depth_hist.get(str(d), 0) + n
                 for d, n in z.get("sel_hist", {}).items():
@@ -282,8 +295,27 @@ class IceTable:
                 if z["n_queued"]:
                     k = (z["min_depth"], z["min_seq"])
                     min_key = k if min_key is None else min(min_key, k)
+            for f in entry["delta"]:
+                for d, n in zones[f].get("done_hist", {}).items():
+                    done_hist[str(d)] = done_hist.get(str(d), 0) + n
+
+            if any(n > depth_hist.get(d, 0) for d, n in done_hist.items()):
+                s["zoned"] = False
+                return s
+
+            def _minus_done(hist: dict[str, int]) -> dict[str, int]:
+                return {
+                    d: n - done_hist.get(d, 0)
+                    for d, n in hist.items()
+                    if n > done_hist.get(d, 0)
+                }
+
+            depth_hist = _minus_done(depth_hist)
+            sel_hist = _minus_done(sel_hist)
+            n_queued = sum(depth_hist.values())
             s.update(
                 {
+                    "merged_rows": s["rows"] - sum(done_hist.values()),
                     "zoned": True,
                     "n_queued": n_queued,
                     "depth_hist": depth_hist,
@@ -552,13 +584,17 @@ class IceTable:
             return out
         return snap["files"]
 
-    def delta_fraction(self) -> float:
-        """delta rows / base rows at the current snapshot (compaction gauge)
-        — straight off the snapshot summaries, no manifest IO."""
-        summ = self.bucket_summaries()
-        base = sum(s["base_rows"] for s in summ.values())
-        delta = sum(s["delta_rows"] for s in summ.values())
-        return (delta / base) if base else float("inf")
+    def buckets_over_file_limit(self, files_per_bucket: int) -> list[str]:
+        """The tiering rule every bucketed table's compaction shares: a
+        bucket is due once its file count (base + delta) exceeds
+        ``files_per_bucket`` — read off the snapshot summaries, no manifest
+        IO. Buckets a round never touches never come due, so compaction
+        cost follows the write rate, not the table size."""
+        return [
+            b
+            for b, s in self.bucket_summaries().items()
+            if s["n_base_files"] + s["n_delta_files"] > files_per_bucket
+        ]
 
     def commit_empty(self, meta: dict[str, Any] | None = None) -> int:
         """Metadata-only commit (carries counters without rewriting data).

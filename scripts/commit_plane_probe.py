@@ -5,11 +5,13 @@ and snapshot size stays O(buckets) regardless of accumulated files. The
 pytest pins it at toy scale (tests/test_icetable.py); this probe evidences
 it at the bench fixture's scale (2M rows, 128 buckets): it copies the
 fixture, then runs N rounds of {select → state transitions + synthetic new
-URLs → append_bucketed_delta → fraction-triggered partial compaction},
+URLs → append_bucketed_delta → per-bucket tiered partial compaction (the
+crawl's rule: IceTable.buckets_over_file_limit)},
 printing per round the delta rows, commit wall time, manifest bytes written,
 touched-bucket count, and snap-N.json size.
 
 Usage: python scripts/commit_plane_probe.py [--rounds 8] [--budget 50000]
+       [--files-per-bucket 8]
 Prints one JSON line at the end (suitable for BASELINE.md / SURVEY quotes).
 """
 
@@ -31,7 +33,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rounds", type=int, default=8)
     ap.add_argument("--budget", type=int, default=50_000)
-    ap.add_argument("--compact-frac", type=float, default=0.25)
+    ap.add_argument("--files-per-bucket", type=int, default=8)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -128,11 +130,9 @@ def main() -> None:
             "data_bytes": tbl.last_commit_bytes,
         }
         compacted = False
-        if tbl.delta_fraction() > args.compact_frac:
+        hot = tbl.buckets_over_file_limit(args.files_per_bucket)
+        if hot:
             t0 = time.time()
-            hot = [
-                b for b, s in tbl.bucket_summaries().items() if s["n_delta_files"]
-            ]
             merged = compacted_frontier(
                 spark, tbl, next_rev=tbl._next_sid(), buckets=hot
             )

@@ -226,7 +226,7 @@ def test_ingest_after_aggressive_retention(spark, tmp_path):
     wd = str(tmp_path / "ret")
     runner = CrawlRunner(
         spark, wd, round_budget=50, with_bytes=False, frontier_buckets=4,
-        compact_delta_frac=0.0,  # compaction is the CURRENT snapshot each round
+        files_per_bucket=1,  # compaction is the CURRENT snapshot each round
     )
     runner.init_from_seeds(simweb.seed_urls(8))
     runner.run(2)

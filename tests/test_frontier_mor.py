@@ -81,12 +81,12 @@ def test_candidates_rank_is_true_host_rank(spark, tbl):
 
 def test_crawl_equivalence_with_salts_and_eager_compaction(spark, tmp_path):
     """salts>1 (giant-host defense → exact window cut) and compaction every
-    round (delta_frac=0) must not change any artifact."""
+    round (files_per_bucket=1) must not change any artifact."""
     oracle = oracle_crawl(SEEDS, rounds=3, round_budget=120)
     runner = run_crawl(
         spark, str(tmp_path / "s"), SEEDS, 3, 120,
         with_bytes=False, frontier_buckets=4, frontier_salts=2,
-        compact_delta_frac=0.0,
+        files_per_bucket=1,
     )
     eng = [
         (r["seq"], r["round"], r["canon_url"])
@@ -94,8 +94,11 @@ def test_crawl_equivalence_with_salts_and_eager_compaction(spark, tmp_path):
     ]
     assert eng == oracle.ordering
     assert {r["url_hash"] for r in runner.seen_df().collect()} == oracle.seen
-    # eager compaction → frontier has no deltas at rest
-    assert runner.frontier.delta_fraction() == 0.0
+    # eager compaction → no bucket holds more than one file at rest
+    assert all(
+        s["n_base_files"] + s["n_delta_files"] <= 1
+        for s in runner.frontier.bucket_summaries().values()
+    )
 
 
 def test_compaction_is_shuffle_free_and_exact(spark, tbl):
@@ -154,7 +157,8 @@ def test_maintenance_keeps_resume_working(spark, tmp_path):
 
 def test_frontier_delta_commit_is_o_changed(spark, tmp_path):
     """A round's frontier commit writes o(frontier) bytes (the delta), and
-    the snapshot metadata proves it: delta rows ≪ base rows."""
+    the snapshot metadata proves it: an append, with every bucket still
+    within the files_per_bucket tier (no compaction was due)."""
     runner = CrawlRunner(
         spark, str(tmp_path / "d"), round_budget=10, with_bytes=False,
         frontier_buckets=4,
@@ -164,8 +168,16 @@ def test_frontier_delta_commit_is_o_changed(spark, tmp_path):
     runner.run(1)
     snap = runner.frontier.snapshot()
     assert snap["op"] == "append"  # delta, not a rewrite
-    frac = runner.frontier.delta_fraction()
-    assert 0 < frac <= runner.compact_delta_frac
+    summ = runner.frontier.bucket_summaries()
+    assert any(s["n_delta_files"] for s in summ.values())
+    assert all(
+        s["n_base_files"] + s["n_delta_files"] <= runner.files_per_bucket
+        for s in summ.values()
+    )
+    # O(changed): the round's delta rows are far fewer than the base's
+    assert sum(s["delta_rows"] for s in summ.values()) < sum(
+        s["base_rows"] for s in summ.values()
+    )
     assert runner.frontier.last_commit_bytes < base_bytes * 25  # sanity: bounded
 
 
@@ -337,7 +349,7 @@ def test_rebucket_split_preserves_equivalence(spark, tmp_path):
     wd = str(tmp_path / "rb")
     runner = CrawlRunner(
         spark, wd, round_budget=120, with_bytes=False,
-        frontier_buckets=2, frontier_salts=1, compact_delta_frac=0.0,
+        frontier_buckets=2, frontier_salts=1, files_per_bucket=1,
         rows_per_bucket_target=40,
     )
     runner.init_from_seeds(SEEDS)
